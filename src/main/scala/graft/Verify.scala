@@ -34,19 +34,9 @@ object Verify {
     // (a timed-out Verify leaves nothing to compare). Half the cores,
     // capped at 16, floored at 4 — leaves headroom for the caller's
     // own work; the env override still wins.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    val spark = GraftSession.local(GraftSession.cpus(
       math.max(4, math.min(16,
-        Runtime.getRuntime.availableProcessors / 2)).toString)
-    val spark = SparkSession.builder()
-      .config("spark.sql.cache.serializer",
-        "graft.functions.GraftCachedBatchSerializer")
-      .config("spark.sql.extensions", "graft.plans.GraftCacheScanExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+        Runtime.getRuntime.availableProcessors / 2)).toString))
     // pin the data dir for oracle generators that read persisted index
     // artifacts (IndexQueries.annOracles) — the queries below build them
     sys.props("graft.oracle.sfDir") = sfDir

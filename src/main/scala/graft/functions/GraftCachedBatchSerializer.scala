@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.columnar.{CachedBatch, CachedBatchSerializer}
 import org.apache.spark.sql.execution.columnar.DefaultCachedBatchSerializer
 import org.apache.spark.sql.internal.SQLConf
@@ -36,8 +37,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * copied bit-for-bit, null rows and null elements are tracked), so
   * every cached plan computes identical results — CacheSerializerSpec
   * pins round-trips and the full oracle gate re-ran green over it.
-  * Registered via the static conf `spark.sql.cache.serializer` on
-  * every session builder. */
+  * Registered via the static conf `spark.sql.cache.serializer` by
+  * [[graft.GraftSession]]. */
 class GraftCachedBatchSerializer extends CachedBatchSerializer {
   import GraftCachedBatchSerializer._
 
@@ -113,11 +114,17 @@ class GraftCachedBatchSerializer extends CachedBatchSerializer {
         }
         new ColumnarBatch(vecs, b.numRows)
       }
+    } else if (default.supportsColumnarOutput(
+        DataTypeUtils.fromAttributes(selectedAttributes))) {
+      // delegated batches, selection the default decodes columnar itself
+      default.convertCachedBatchToColumnarBatch(
+        input, cacheAttributes, selectedAttributes, conf)
     } else {
       // Cache schema holds a type we don't store (delegated batches)
-      // but the SELECTION is one we promised columnar output for:
-      // rebuild columnar batches from the default row path. Correctness
-      // fallback — the per-row fill only runs for this mixed shape.
+      // but the SELECTION is one only we promised columnar output for
+      // (an array<float> column): rebuild columnar batches from the
+      // default row path. Correctness fallback — the per-row fill only
+      // runs for this mixed shape.
       val types = selectedAttributes.map(_.dataType).toArray
       val batchRows = conf.columnBatchSize
       default.convertCachedBatchToInternalRow(

@@ -838,10 +838,12 @@ case class RleRuns(child: Expression)
     StructField("bkt", LongType, nullable = false),
     StructField("m", LongType, nullable = false))), containsNull = false)
 
+  // getLong reads a null slot as an arbitrary value, which would encode
+  // as a real bucket: null-bearing element types are refused up front
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
+    case ArrayType(LongType, false) => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
-      s"rle_runs requires array<bigint>, got ${other.simpleString}")
+      s"rle_runs requires array<bigint> without nulls, got ${other.simpleString}")
   }
 
   override def nullSafeEval(a: Any): Any = {

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.{GraftText, GraftVector}
@@ -95,11 +96,23 @@ object DedupQueries {
       .groupBy($"doc_id")
       .agg(min($"rep").as("keeper"))
     // Materialize the (small, linear) output eagerly — callers get a
-    // self-contained frame (the jaccardPairsRaw discipline).
-    dm.join(verified, Seq("doc_id"), "left")
+    // self-contained frame (the jaccardPairsRaw discipline) — then free
+    // the span-sized inputs' blocks now rather than at ContextCleaner's
+    // pace: the output's lineage no longer reaches them.
+    val out = dm.join(verified, Seq("doc_id"), "left")
       .select($"doc_id", coalesce($"keeper", $"doc_id").as("keeper_id"))
       .localCheckpoint(true)
+    Seq(dm, buckets).foreach(releaseCheckpoint)
+    out
   }
+
+  /** Unpersist the blocks behind an eager `localCheckpoint` frame (its
+    * LogicalRDD's RDD; `Dataset.unpersist` only covers `cache`). */
+  private def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
 
   /** The UNORDERED mixture sample — the entire production plan of
     * d_mixture_sample before its output ordering, factored out so

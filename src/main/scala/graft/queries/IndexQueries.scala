@@ -1133,7 +1133,7 @@ object IndexQueries {
     * these entries simply stay rows-only (the pre-round-3 behavior). */
   /** The oracle keys whose SQL is generated FROM the persisted index —
     * computing them forces an index build. Single-query tooling
-    * (VerifyOne) consults this to avoid paying a full IVF+PQ fit just
+    * (`Probe verify`) consults this to avoid paying a full IVF+PQ fit just
     * to materialize oracle strings for unrelated queries. */
   val AnnOracleKeys: Set[String] =
     Set("v_ivf_build", "v_ivf_search", "v_ivf_filtered", "v_pq_search",
@@ -1333,7 +1333,7 @@ object IndexQueries {
         graft.operators.IndexOracle
           .mipsIvfOracle(mipsCent, m2, K, nprobe = 4, NumQueries)
       })
-    // AnnOracleKeys is VerifyOne's routing table for exactly this map:
+    // AnnOracleKeys is `Probe verify`'s routing table for exactly this map:
     // a key added here but not there would silently route to the static
     // maps and emit no oracle
     require(built.keySet == AnnOracleKeys,

@@ -1,7 +1,14 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types._
+import org.apache.spark.sql.vectorized.ColumnarBatch
+import org.apache.spark.storage.StorageLevel
 
 /** GraftCachedBatchSerializer round-trip laws: caching must never change
   * what a plan computes — for the flat-float fast path (vector frames),
@@ -82,7 +89,8 @@ class CacheSerializerSpec extends SparkSpec {
     import spark.implicits._
     val df = spark.range(500)
       .select($"id", concat(lit("s"), $"id").as("s"),
-        array($"id".cast("float"), lit(2.5f)).as("vec"))
+        array($"id".cast("float"), lit(2.5f)).as("vec"),
+        ($"id" % 100).cast("byte").as("b"), ($"id" % 1000).cast("short").as("h"))
     val cached = df.cache()
     try {
       cached.count() // populate with the DELEGATED (default) format
@@ -90,6 +98,25 @@ class CacheSerializerSpec extends SparkSpec {
       val plain = df.select($"vec", $"id").collect().map(_.toSeq).toSeq
       assert(sel === plain)
     } finally cached.unpersist(true)
+    // the serializer's columnar contract on the delegated batches: every
+    // selection it reports columnar-capable must decode to the same rows
+    // — array<float> through the rebuild, byte/short through the default
+    val ser = new graft.functions.GraftCachedBatchSerializer
+    val attrs = df.queryExecution.analyzed.output
+    val batches = ser.convertInternalRowToCachedBatch(df.queryExecution.toRdd,
+      attrs, StorageLevel.MEMORY_ONLY, SQLConf.get)
+    Seq(Seq("vec", "id"), Seq("b", "h", "id")).foreach { names =>
+      val selected = names.map(n => attrs.find(_.name == n).get)
+      assert(ser.supportsColumnarOutput(DataTypeUtils.fromAttributes(selected)))
+      val types = selected.map(_.dataType).toArray
+      val viaColumnar = ser
+        .convertCachedBatchToColumnarBatch(batches, attrs, selected, SQLConf.get)
+        .flatMap(CacheSerializerSpec.rowValues(_, types)).collect()
+        .map(norm).toSeq
+      val plainRows = df.select(names.map(col): _*).collect()
+        .map(r => norm(r.toSeq)).toSeq
+      assert(viaColumnar === plainRows, s"selection $names")
+    }
   }
 
   test("fast path: filters over the cached frame are applied downstream") {
@@ -103,4 +130,21 @@ class CacheSerializerSpec extends SparkSpec {
       assert(filtered.nonEmpty)
     } finally e.unpersist(true)
   }
+}
+
+object CacheSerializerSpec {
+  /** A decoded batch's rows as plain values, read per declared type
+    * (runs executor-side, hence outside the spec instance). */
+  def rowValues(b: ColumnarBatch, types: Array[DataType]): Iterator[Seq[Any]] =
+    b.rowIterator().asScala.map { r =>
+      types.indices.map { i =>
+        types(i) match {
+          case ByteType => r.getByte(i)
+          case ShortType => r.getShort(i)
+          case LongType => r.getLong(i)
+          case ArrayType(FloatType, _) => r.getArray(i).toFloatArray.toSeq
+          case other => throw new IllegalArgumentException(s"unread type $other")
+        }
+      }
+    }
 }

@@ -411,4 +411,22 @@ class DedupSpec extends SparkSpec {
     assert(components(keys.toSeq) === components(truePairs),
       "sparsified edge store changed connected components")
   }
+
+  test("minhashKeeperAssign leaves only its output checkpoint persisted") {
+    val docs = Tables.load(spark, sfDir, "documents")
+      .select($"doc_id",
+        sort_array(array_distinct(GraftText.whitespaceTokens($"text"))).as("ws"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val out = DedupQueries.minhashKeeperAssign(
+      docs, GraftText.jaccardSorted(_, _), 0.7)
+    val outRdds = out.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }
+    try {
+      assert(outRdds.size === 1)
+      assert(spark.sparkContext.getPersistentRDDs.keySet.toSet -- before ===
+        outRdds.map(_.id).toSet)
+      assert(out.count() === docs.count())
+    } finally outRdds.foreach(_.unpersist(blocking = false))
+  }
 }

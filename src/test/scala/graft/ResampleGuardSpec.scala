@@ -78,4 +78,15 @@ class ResampleGuardSpec extends SparkSpec {
     assert(msg.contains(s"spans ${cap + 1} hours > cap $cap"),
       s"boundary arithmetic drifted: $msg")
   }
+
+  test("q_resample_ffill's unsorted emit equals its orderBy(user_id, hour_epoch) form") {
+    // the entry orders by range-sorting the anchors and exploding in
+    // place, never by a logical sort: pin that the physical order is
+    // the declared one, row for row
+    val q = graft.SparkEntry.queries("q_resample_ffill")(spark, sfDir)
+    val emitted = q.collect().map(_.toSeq).toSeq
+    val sorted = q.orderBy("user_id", "hour_epoch").collect().map(_.toSeq).toSeq
+    assert(emitted.nonEmpty)
+    assert(emitted === sorted)
+  }
 }

@@ -129,4 +129,19 @@ class TextStatsSpec extends SparkSpec {
     assert(res(5L) === (("pii", false)))
     assert(res(6L) === (("short,repetitive,no_lang", false)))
   }
+
+  test("rle_runs encodes sorted runs and refuses a null-bearing element type") {
+    import org.apache.spark.sql.functions.{array, lit}
+    val runs = spark.range(1)
+      .select(TextQueries.rleRuns(array(lit(1L), lit(1L), lit(3L))))
+      .head().getSeq[org.apache.spark.sql.Row](0)
+      .map(r => (r.getLong(0), r.getLong(1)))
+    assert(runs === Seq((1L, 2L), (3L, 1L)))
+    // a null slot would read back as an arbitrary bucket value
+    val ex = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.range(1).select(TextQueries.rleRuns(
+        array(lit(1L), lit(null).cast("long"))))
+    }
+    assert(ex.getMessage.contains("rle_runs"), ex.getMessage)
+  }
 }

@@ -4,7 +4,7 @@
 # with a concurrent `sbt test`). Mirrors build.sbt's javaOptions:
 # JDK-17 add-opens, the Vector API incubator module, and the 16g
 # default heap (SPARK_DRIVER_MEM overrides).
-#   tools/run_main.sh graft.Bench [args...]
+#   tools/run_main.sh graft.Bench|graft.Verify|graft.ScaleData|graft.Probe [args...]
 set -euo pipefail
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 CLASSES="$REPO/target/scala-2.13/classes"
