@@ -41,7 +41,9 @@ object ConnectedComponents {
     * 100 TB the first rounds run distributed; the tail always lands
     * here. 2²⁰ edges collect as primitive Long pairs — tens of MB of
     * transient driver heap, well under any realistic driver budget; 0
-    * disables the finish (pure distributed loop, spec-compared).
+    * disables the finish (pure distributed loop, spec-compared), as
+    * does [[graft.Route]]'s switch. `edgesPerTask` bounds the edges per
+    * task of the contraction joins.
     *
     * `validateNodes`: the throw-don't-degrade guard that every edge
     * endpoint exists in `nodes`. It costs one full pass over the edge
@@ -61,9 +63,11 @@ object ConnectedComponents {
   def minLabel(nodes: DataFrame, idCol: String, edges: DataFrame,
       aCol: String, bCol: String, maxIter: Int = 20,
       smallFinish: Int = 1 << 20, validateNodes: Boolean = true,
-      trustedEndpoints: Boolean = false): DataFrame = {
+      trustedEndpoints: Boolean = false,
+      edgesPerTask: Long = 500_000L): DataFrame = {
     require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
     require(smallFinish >= 0, s"smallFinish must be >= 0, got $smallFinish")
+    require(edgesPerTask > 0, s"edgesPerTask must be > 0, got $edgesPerTask")
     val spark = nodes.sparkSession
     import spark.implicits._
     var labels = nodes
@@ -124,7 +128,8 @@ object ConnectedComponents {
     // paths are provably identical; otherwise only the loop runs (no
     // size-dependent semantic fork).
     val nEdges = eo.count() // rides the checkpoint it forces either way
-    if (smallFinish > 0 && endpointsKnown && nEdges <= smallFinish) {
+    if (smallFinish > 0 && endpointsKnown &&
+        graft.Route.fits(nEdges, smallFinish)) {
       val mapDf = unionFindMap(spark, eo.as[(Long, Long)].collect())
       return labels.join(mapDf, Seq("lab"), "left")
         .select($"id", coalesce($"root", $"lab").as("component"))
@@ -135,19 +140,17 @@ object ConnectedComponents {
     // core count, the second decade's 70 M-edge contraction joins ran
     // 2 M+ edges of join/sort state per task and a cold 32-task 16 g
     // run died of heap (the r14 SCALE_sf10 OOM, reproduced at head).
-    // Bound per-task edge mass instead: raise the loop's shuffle width
-    // to nEdges / graft.cc.edgesPerTask (never lowering the session
-    // value), and let AQE coalesce healthy rounds back down. The
-    // fixpoint is partitioning-independent (min-label, exact), so this
-    // is pure memory shaping; restored after the loop.
-    val spKey = "spark.sql.shuffle.partitions"
-    val prevSp = spark.conf.get(spKey)
-    val edgesPerTask = sys.props.get("graft.cc.edgesPerTask")
-      .flatMap(_.toLongOption).filter(_ > 0).getOrElse(500_000L)
-    val wantSp = math.min(20_000L,
-      math.max(prevSp.toLong, nEdges / edgesPerTask + 1)).toInt
-    if (wantSp > prevSp.toInt) spark.conf.set(spKey, wantSp.toString)
-    try {
+    // Bound per-task edge mass instead: the loop's joins repartition
+    // both inputs to nEdges / edgesPerTask when that beats the session
+    // width, whose conf is never written (concurrent queries keep
+    // theirs); map-side-combined distinct/groupBy stay at the session
+    // width. The fixpoint is partitioning-independent (min-label,
+    // exact), so this is pure memory shaping.
+    val sessionSp = spark.conf.get("spark.sql.shuffle.partitions").toLong
+    val wantSp = math.min(20_000L, nEdges / edgesPerTask + 1)
+    def wide(df: DataFrame, keys: String*): DataFrame =
+      if (wantSp > sessionSp) df.repartition(wantSp.toInt, keys.map(col): _*)
+      else df
     var iter = 0
     var converged = false
     while (!converged) {
@@ -170,9 +173,10 @@ object ConnectedComponents {
       val e2 =
         if (iter == 0 && endpointsKnown) eo
         else {
-          val alive = eo
-            .join(labels.select($"id".as("a"), $"lab".as("la")), "a")
-            .join(labels.select($"id".as("b"), $"lab".as("lb")), "b")
+          val aliveA = wide(eo, "a")
+            .join(wide(labels.select($"id".as("a"), $"lab".as("la")), "a"), "a")
+          val alive = wide(aliveA, "b")
+            .join(wide(labels.select($"id".as("b"), $"lab".as("lb")), "b"), "b")
             .filter($"la" =!= $"lb")
             .localCheckpoint(false, EdgeLevel)
           eo = alive.select($"a", $"b")
@@ -185,7 +189,7 @@ object ConnectedComponents {
       // no endpoint gate HERE: the contraction joins above already
       // dropped any edge with an endpoint outside `nodes`, so the
       // label graph is valid by construction inside the loop
-      else if (nLabelEdges <= smallFinish && smallFinish > 0) {
+      else if (smallFinish > 0 && graft.Route.fits(nLabelEdges, smallFinish)) {
         // bounded finish: the label graph fits — close it exactly with
         // one driver union-find (roots are always the component-min
         // label, so the final root IS the min node id) and map every
@@ -206,15 +210,16 @@ object ConnectedComponents {
         val upd = sym.groupBy($"a").agg(min($"b").as("mn"))
           .select($"a".as("oldLab"), least($"a", $"mn").as("newLab"))
           .filter($"oldLab" =!= $"newLab")
-        val merged = labels
-          .join(upd.withColumnRenamed("oldLab", "lab"), Seq("lab"), "left")
+        val merged = wide(labels, "lab")
+          .join(wide(upd.withColumnRenamed("oldLab", "lab"), "lab"),
+            Seq("lab"), "left")
           .select($"id", coalesce($"newLab", $"lab").as("lab"))
           .localCheckpoint(false)
         // compress (pointer jumping): lab ← lab(lab). Without it a path
         // graph moves ONE hop per round (O(n) rounds); jumping halves
         // label-chain depth every round, giving the O(log n) bound.
-        labels = merged
-          .join(merged.select($"id".as("lab"), $"lab".as("lab2")),
+        labels = wide(merged, "lab")
+          .join(wide(merged.select($"id".as("lab"), $"lab".as("lab2")), "lab"),
             Seq("lab"), "left")
           .select($"id", coalesce($"lab2", $"lab").as("lab"))
           .localCheckpoint(false)
@@ -222,9 +227,6 @@ object ConnectedComponents {
       }
     }
     labels.select($"id", $"lab".as("component"))
-    } finally {
-      if (wantSp > prevSp.toInt) spark.conf.set(spKey, prevSp)
-    }
   }
 
   /** Driver union-find over a bounded edge list → broadcast (lab, root)

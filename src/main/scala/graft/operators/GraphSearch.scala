@@ -370,22 +370,6 @@ object GraphSearch {
       stored.select($"neighbor_id".as("node"), $"node".as("neighbor_id")))
   }
 
-  /** Driver-resident rounds serve batches up to this many queries; a
-    * larger batch routes to the distributed reduction. Serving batches
-    * are bounded by the request (|Q| ≈ 80 here, a few hundred at most
-    * anywhere), but the INSERT / compact / delta batches scale with
-    * the corpus (4 % of it at the insert entries' contract — 20 k at
-    * sf10, ~2 M at 100×), and per round the driver path materializes
-    * and sorts |Q|·ef·(deg+1) boxed rows on ONE thread: measured at
-    * sf10, v_graph_insert 10.7 → 37.3 s when r12 routed everything
-    * driver-side. The threshold is a sys-prop so the equivalence spec
-    * can force either path on the same input; 1024 comfortably covers
-    * every serving shape while sending corpus-scaled batches to the
-    * distributed aggregate ([[beamLoopDistributed]]). */
-  private[graft] def driverBeamMaxQ: Int =
-    sys.props.get("graft.beam.driverMaxQ").flatMap(_.toIntOption)
-      .getOrElse(1024)
-
   /** Collect a bounded frame and re-plant it as a LocalRelation, so
     * every later broadcast of it is a driver-memory copy instead of a
     * scheduled re-scan job (the query frame was re-scanned from parquet
@@ -401,16 +385,16 @@ object GraphSearch {
     * so a corpus-scaled query frame must fail loudly here rather than
     * funnel single-threaded through driver state — the guard [[beamLoop]]
     * implements by routing, expressed as a require where no distributed
-    * twin exists. Bounded probe: collects at most maxQ+1 rows. */
+    * twin exists. A contract guard, not a route, so the probe is the
+    * switch-blind [[graft.Route.bounded]] at [[graft.Route.BeamMaxQ]]. */
   private def localDfBounded(df: DataFrame, what: String): DataFrame = {
-    val maxQ = driverBeamMaxQ
-    val head = df.limit(maxQ + 1).collect()
-    require(head.length <= maxQ,
-      s"$what: query batch exceeds graft.beam.driverMaxQ=$maxQ rows — " +
-        "the driver-resident beam engine serves bounded batches only; " +
-        "route corpus-scaled batches through the distributed beam loop")
+    val head = graft.Route.bounded(df, graft.Route.BeamMaxQ)
+    require(head.isDefined,
+      s"$what: query batch exceeds Route.BeamMaxQ=${graft.Route.BeamMaxQ} " +
+        "rows — the driver-resident beam engine serves bounded batches " +
+        "only; route corpus-scaled batches through the distributed beam loop")
     df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(head: _*), df.schema)
+      java.util.Arrays.asList(head.get: _*), df.schema)
   }
 
   /** The expand→score→keep-ef beam loop from a caller-supplied entry
@@ -418,30 +402,30 @@ object GraphSearch {
     * layered descent, and the insert path. Returns the final scored
     * frame (query_id, beam: array⟨(score,id)⟩ ranked by (d, node)).
     *
-    * Routes by |Q| ([[driverBeamMaxQ]]): bounded serving batches run
+    * Routes by |Q| ([[graft.Route.BeamMaxQ]]): serving batches run
     * the driver-resident rounds ([[beamRounds]] — collects the entry
     * beam and query vectors once; both are the broadcast sides of
     * every round's joins, i.e. they were ALREADY driver-collected each
     * round, a broadcast IS a collect), and corpus-scaled batches run
     * the distributed TopKByScore reduction so no per-round keep-ef
     * ever runs single-threaded over corpus-sized state. The size probe
-    * is limit(maxQ+1).collect() — bounded work, and when the batch is
-    * small the probe IS the collect the driver path needed anyway, so
-    * the serving job count is unchanged. Both paths implement the same
+    * is [[graft.Route.collectIfSmall]] — bounded work, and when the
+    * batch is small the probe IS the collect the driver path needed
+    * anyway. Both paths implement the same
     * rounds and the same greedy-stabilization skip; BeamPathLawSpec
     * pins bit-equality on a forced-path pair. */
   private def beamLoop(edges: DataFrame, vecs: DataFrame, q: DataFrame,
       entry: DataFrame, ef: Int, hops: Int): DataFrame = {
     val s = edges.sparkSession
-    val maxQ = driverBeamMaxQ
-    val qHead = q.limit(maxQ + 1).collect()
-    if (qHead.length <= maxQ) {
-      val qLocal = s.createDataFrame(
-        java.util.Arrays.asList(qHead: _*), q.schema)
-      val (rows, schema) = beamRounds(edges, vecs, qLocal,
-        entry.collect(), ef, hops)
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-    } else beamLoopDistributed(edges, vecs, q, entry, ef, hops)
+    graft.Route.collectIfSmall(q, graft.Route.BeamMaxQ) match {
+      case Some(qHead) =>
+        val qLocal = s.createDataFrame(
+          java.util.Arrays.asList(qHead: _*), q.schema)
+        val (rows, schema) = beamRounds(edges, vecs, qLocal,
+          entry.collect(), ef, hops)
+        s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      case None => beamLoopDistributed(edges, vecs, q, entry, ef, hops)
+    }
   }
 
   /** The distributed beam rounds — the corpus-scaled-batch path: the
@@ -470,13 +454,12 @@ object GraphSearch {
     // measured batch (the insert contract ships the batch to executors
     // anyway), but a 100× batch (~2 M queries × ef 10) pushes the
     // per-hop broadcast toward the 8 GB relation cap and driver-memory
-    // limits. Past graft.beam.distBeamMaxRows (on |Q|·ef, counted once
+    // limits. Past Route.BeamBroadcastMaxRows (on |Q|·ef, counted once
     // off the pinned query frame) the hints DROP and each round's
     // joins key-shuffle the beam against the edge/vector tables
     // instead — slower per hop, memory-safe at any batch size.
-    val beamCap = sys.props.get("graft.beam.distBeamMaxRows")
-      .flatMap(_.toLongOption).getOrElse(50_000_000L)
-    val hintB = qc.count() * ef <= beamCap
+    val hintB = graft.Route.fits(qc.count() * ef,
+      graft.Route.BeamBroadcastMaxRows)
     def maybeB(df: DataFrame): DataFrame = if (hintB) broadcast(df) else df
     var beam = entry.localCheckpoint(true)
     var scored: DataFrame = null

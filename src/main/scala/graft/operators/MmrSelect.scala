@@ -66,16 +66,14 @@ object MmrSelect {
     // sf0.1 wall (`Probe jobs`: 38 jobs, more wall between jobs than in
     // them). Corpus-scaled query sets keep the distributed rounds: per
     // round the frame stays |queries|×nCandidates, queries scale out.
-    // The size probe is limit(max+1).collect() — when the batch is
-    // small, the probe IS the collect the driver path needs.
-    // MmrPathLawSpec pins bit-equality on a forced-path pair.
-    val maxCand = GraphSearch.driverBeamMaxQ * nCandidates
-    val candHead = candPlan.limit(maxCand + 1).collect()
-    if (candHead.length <= maxCand)
-      return diversifyLocal(spark, candPlan.schema, candHead, k, lambda,
-        oneMinus)
-
-    val cand = candPlan.localCheckpoint(true)
+    // The probe (Route.collectIfSmall) IS the collect the driver path
+    // needs. MmrPathLawSpec pins bit-equality of the two paths.
+    val cand = graft.Route.collectIfSmall(candPlan,
+        graft.Route.BeamMaxQ * nCandidates) match {
+      case Some(candHead) => return diversifyLocal(spark, candPlan.schema,
+        candHead, k, lambda, oneMinus)
+      case None => candPlan.localCheckpoint(true)
+    }
 
     val w = Window.partitionBy($"query_id").orderBy($"score".desc, $"cid")
     // round 1 argmaxes on rel ITSELF (not λ·rel: multiplying two

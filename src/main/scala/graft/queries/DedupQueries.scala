@@ -345,7 +345,7 @@ object DedupQueries {
     //    never shuffles it: the slim exploded batch key set
     //    broadcasts to the corpus scan while its estimated row count
     //    (Σ np per batch doc, one bounded agg on the shared cache)
-    //    stays under graft.dedup.incrBroadcastMaxRows; past that the
+    //    stays under Route.DedupBroadcastMaxRows; past that the
     //    hint drops and the key join shuffles both slim key streams —
     //    never the payload arrays (the r13 advice's ungated-broadcast
     //    fix).
@@ -380,8 +380,8 @@ object DedupQueries {
           .otherwise(lit(0L))))
       .head.get(0)).map(_.asInstanceOf[Long]).getOrElse(0L)
     val bKeysMaybeB =
-      if (bKeyRowsEst <= sys.props.get("graft.dedup.incrBroadcastMaxRows")
-          .flatMap(_.toLongOption).getOrElse(8_000_000L)) broadcast(bKeys)
+      if (graft.Route.fits(bKeyRowsEst, graft.Route.DedupBroadcastMaxRows))
+        broadcast(bKeys)
       else bKeys
     // the candidate stream is SLIM — keys and lengths only, no word
     // arrays: the fan-out is the quadratic-shaped mass, so every byte

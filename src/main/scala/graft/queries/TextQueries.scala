@@ -97,40 +97,35 @@ object TextQueries {
     // arithmetic — every op is exact bigint, so there is no float-order
     // pinning to do at all — while a corpus-scale frame keeps the
     // distributed rounds (one map-side-combined 65-key aggregate per
-    // round). The probe IS the collect: limit(max+1) on materialized
-    // blocks. QualityPathLawSpec pins the two paths identical.
+    // round). The probe IS the collect (Route.collectIfSmall on
+    // materialized blocks). QualityPathLawSpec pins the two identical.
     val feats = perceptronFeats(docsIn).localCheckpoint(true)
-    val maxDocs = qualityDriverMaxDocs
-    val head = feats.limit(maxDocs + 1).collect()
-    if (head.length <= maxDocs) {
-      val ds = decodePerceptronFeats(head)
-      val w = perceptronTrainLocal(ds, rounds)
-      val rows = java.util.Arrays.asList(ds.map { d =>
-        var sc = 0L
-        var i = 0
-        while (i < d.bkts.length) { sc += d.ms(i) * w(d.bkts(i)); i += 1 }
-        org.apache.spark.sql.Row(d.docId, sc, sc > 0L, d.y == 1L)
-      }: _*)
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("score",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("pred_hq",
-          org.apache.spark.sql.types.BooleanType),
-        org.apache.spark.sql.types.StructField("is_hq",
-          org.apache.spark.sql.types.BooleanType)))
-      s.createDataFrame(rows, schema)
-    } else {
-      val w = perceptronTrainOnFeats(feats, rounds)
-      feats.select($"doc_id", perceptronScoreCol(w).as("score"),
-        (perceptronScoreCol(w) > 0L).as("pred_hq"), ($"y" === 1L).as("is_hq"))
+    graft.Route.collectIfSmall(feats, graft.Route.QualityMaxDocs) match {
+      case Some(head) =>
+        val ds = decodePerceptronFeats(head)
+        val w = perceptronTrainLocal(ds, rounds)
+        val rows = java.util.Arrays.asList(ds.map { d =>
+          var sc = 0L
+          var i = 0
+          while (i < d.bkts.length) { sc += d.ms(i) * w(d.bkts(i)); i += 1 }
+          org.apache.spark.sql.Row(d.docId, sc, sc > 0L, d.y == 1L)
+        }: _*)
+        val schema = org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("doc_id",
+            org.apache.spark.sql.types.LongType),
+          org.apache.spark.sql.types.StructField("score",
+            org.apache.spark.sql.types.LongType),
+          org.apache.spark.sql.types.StructField("pred_hq",
+            org.apache.spark.sql.types.BooleanType),
+          org.apache.spark.sql.types.StructField("is_hq",
+            org.apache.spark.sql.types.BooleanType)))
+        s.createDataFrame(rows, schema)
+      case None =>
+        val w = perceptronTrainOnFeats(feats, rounds)
+        feats.select($"doc_id", perceptronScoreCol(w).as("score"),
+          (perceptronScoreCol(w) > 0L).as("pred_hq"), ($"y" === 1L).as("is_hq"))
     }
   }
-
-  private def qualityDriverMaxDocs: Int =
-    sys.props.get("graft.quality.driverMaxDocs")
-      .flatMap(_.toIntOption).getOrElse(1_000_000)
 
   /** Decoded (doc_id, y, sparse bucket counts) feature row — the driver
     * twin's working form. docId stays boxed/untyped so a null rides
@@ -233,10 +228,10 @@ object TextQueries {
     * by the same doc-count law as [[perceptronQuality]]. */
   private[graft] def perceptronTrain(docsIn: DataFrame, rounds: Int): Array[Long] = {
     val feats = perceptronFeats(docsIn).localCheckpoint(true)
-    val maxDocs = qualityDriverMaxDocs
-    val head = feats.limit(maxDocs + 1).collect()
-    if (head.length <= maxDocs) perceptronTrainLocal(decodePerceptronFeats(head), rounds)
-    else perceptronTrainOnFeats(feats, rounds)
+    graft.Route.collectIfSmall(feats, graft.Route.QualityMaxDocs) match {
+      case Some(head) => perceptronTrainLocal(decodePerceptronFeats(head), rounds)
+      case None => perceptronTrainOnFeats(feats, rounds)
+    }
   }
 
   /** FROZEN-model inference: score (doc_id, text) rows against an
@@ -1174,14 +1169,11 @@ object TextQueries {
       // wall. A corpus whose vocabulary graph outgrows the threshold
       // keeps the distributed rounds (the 64-way bucket spread exists
       // for exactly that shape). TextrankPathLawSpec pins the two
-      // paths bit-identical; the probe is limit(max+1) on the already-
-      // checkpointed edge store, so the driver path's collect reads
-      // materialized rows.
-      val maxEdges = sys.props.get("graft.textrank.driverMaxEdges")
-        .flatMap(_.toIntOption).getOrElse(1_000_000)
-      val ewHead = ew.limit(maxEdges + 1).collect()
-      if (ewHead.length <= maxEdges) textrankLocal(s, ewHead)
-      else textrankDistributed(s, ew)
+      // paths bit-identical; the probe (Route.collectIfSmall) reads the
+      // already-checkpointed edge store.
+      graft.Route.collectIfSmall(ew, graft.Route.TextrankMaxEdges)
+        .map(textrankLocal(s, _))
+        .getOrElse(textrankDistributed(s, ew))
     })) ++ textQueriesRest
 
   /** The distributed 8-round damped power iteration over a checkpointed

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{GraphSearch, IndexStore}
 
-/** The beam engine's |Q| routing law (graft.beam.driverMaxQ): a batch
+/** The beam engine's |Q| routing law (Route.BeamMaxQ): a batch
   * at or under the threshold runs the DRIVER-RESIDENT rounds, a larger
   * batch runs the DISTRIBUTED TopKByScore rounds — and the two paths
   * are bit-identical on the same input, because both implement the
@@ -41,39 +41,29 @@ class BeamPathLawSpec extends SparkSpec {
     spark.read.parquet(s"$fixtureDir/embeddings.parquet")
       .select($"vec_id", $"embedding").cache()
 
-  /** 40 queries: above a forced tiny threshold, below the default. */
+  /** 40 queries: under the default threshold, so default routing runs
+    * the driver-resident rounds. */
   private lazy val queries = emb.filter($"vec_id" < 40)
     .select($"vec_id".as("query_id"), $"embedding".as("qv"))
 
-  private def searchRows(maxQ: Int): Seq[(Long, Long, Long, Double)] = {
+  test("driver and distributed beam paths are bit-identical (40 queries, forced routing)") {
     val ivfDir = IndexStore.ivf(spark, fixtureDir)
     val gDir = IndexStore.knnGraph(spark, fixtureDir)
-    val prev = sys.props.get("graft.beam.driverMaxQ")
-    sys.props("graft.beam.driverMaxQ") = maxQ.toString
-    try GraphSearch.search(spark, ivfDir, gDir, emb, queries,
-        k = 5, ef = 16, hops = 3)
-      .select($"query_id", $"neighbor_id", $"rnk", $"dist")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      .toSeq.sorted
-    finally prev match {
-      case Some(v) => sys.props("graft.beam.driverMaxQ") = v
-      case None => sys.props.remove("graft.beam.driverMaxQ")
+    val rows = routeLaw {
+      GraphSearch.search(spark, ivfDir, gDir, emb, queries,
+          k = 5, ef = 16, hops = 3)
+        .select($"query_id", $"neighbor_id", $"rnk", $"dist")
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+        .toSeq.sorted
     }
-  }
-
-  test("driver and distributed beam paths are bit-identical (40 queries, forced routing)") {
-    // maxQ=1000 ⇒ 40 ≤ 1000: driver-resident; maxQ=1 ⇒ 40 > 1: distributed
-    val driver = searchRows(maxQ = 1000)
-    val dist = searchRows(maxQ = 1)
-    assert(driver.nonEmpty)
-    assert(driver === dist)
+    assert(rows.nonEmpty)
   }
 
   test("default threshold covers serving batches and routes corpus-scaled batches away") {
     // spec-pins the production constant: serving shapes (|Q| ≤ a few
     // hundred) stay driver-resident; an insert batch at sf10 (20k) or
     // beyond must not.
-    assert(GraphSearch.driverBeamMaxQ === 1024)
+    assert(Route.BeamMaxQ === 1024)
   }
 }

@@ -33,6 +33,33 @@ class ComponentsSpec extends SparkSpec {
     assert(comp.values.toSet === Set(0L))
   }
 
+  test("a wide contraction shapes its own shuffles and never writes the session width") {
+    // 99 edges / edgesPerTask 10 ⇒ a wanted width of 10, above the
+    // session's 4: the loop must widen its own joins, not the session
+    // conf a concurrent query on the shared session would plan with
+    val n = 100L
+    val nodes = (0L until n).toDF("id")
+    val chain = (1L until n).map(i => (i - 1, i)).toDF("a", "b")
+    val key = "spark.sql.shuffle.partitions"
+    val sessionSp = spark.conf.get(key)
+    val seen = scala.collection.concurrent.TrieMap.empty[String, Unit]
+    val running = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val poller = new Thread(() =>
+      while (running.get) { seen.put(spark.conf.get(key), ()); Thread.sleep(1) })
+    poller.start()
+    val wide =
+      try ConnectedComponents.minLabel(nodes, "id", chain, "a", "b",
+          smallFinish = 0, edgesPerTask = 10)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      finally { running.set(false); poller.join() }
+    assert(seen.keySet.toSet === Set(sessionSp))
+    assert(spark.conf.get(key) === sessionSp)
+    val default = ConnectedComponents.minLabel(nodes, "id", chain, "a", "b")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(wide === default)
+    assert(default.values.toSet === Set(0L))
+  }
+
   test("a graph needing exactly maxIter merge rounds converges, not throws") {
     val comp = ConnectedComponents.minLabel(
         Seq(1L, 2L).toDF("id"), "id", Seq((1L, 2L)).toDF("a", "b"), "a", "b",

@@ -65,17 +65,17 @@ class HnswLevelsSpec extends SparkSpec {
   test("hnswLevels sizes the fixture to three layers; a forced override " +
       "wins but still clamps to a populated slice") {
     assert(IndexStore.hnswLevels(spark, fixtureDir) == 3)
-    try {
-      sys.props("graft.hnsw.levels") = "2"
+    withSysProp("graft.hnsw.levels", "2") {
       assert(IndexStore.hnswLevels(spark, fixtureDir) == 2)
-      // a forced depth may only land on a POPULATED slice (id 0's
-      // h2 = 0 populates every level here, so 5 is accepted as-is;
-      // a corpus without such a node steps down instead)
-      sys.props("graft.hnsw.levels") = "5"
+    }
+    // a forced depth may only land on a POPULATED slice (id 0's
+    // h2 = 0 populates every level here, so 5 is accepted as-is;
+    // a corpus without such a node steps down instead)
+    withSysProp("graft.hnsw.levels", "5") {
       val eff = IndexStore.hnswLevels(spark, fixtureDir)
       assert(eff <= 5 &&
         (0L until 2500L).exists(v => levelOf(v) >= eff), s"clamped to $eff")
-    } finally sys.props.remove("graft.hnsw.levels")
+    }
   }
 
   test("the three-layer store persists layer1..layer3 + entry + meta; " +

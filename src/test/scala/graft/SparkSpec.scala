@@ -16,4 +16,26 @@ object TestSpark {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Run `body` with system property `key` set to `value`; the previous
+    * value (or its absence) is restored afterwards. */
+  def withSysProp[T](key: String, value: String)(body: => T): T = {
+    val prev = sys.props.get(key)
+    sys.props(key) = value
+    try body
+    finally prev match {
+      case Some(v) => sys.props(key) = v
+      case None => sys.props.remove(key)
+    }
+  }
+
+  /** A routing law ([[graft.Route]]): `body` under default routing, where
+    * spec-sized inputs take the driver twins, equals `body` with every
+    * route forced distributed. Returns the default-routing result. */
+  def routeLaw[T](body: => T): T = {
+    val routed = body
+    val distributed = withSysProp("graft.route.distributed", "true")(body)
+    assert(routed === distributed)
+    routed
+  }
 }

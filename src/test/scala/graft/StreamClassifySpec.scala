@@ -37,21 +37,24 @@ class StreamClassifySpec extends SparkSpec {
 
     val rows = docs.as[DocRow].collect()
     val stream = MemoryStream[DocRow]
-    var served = Map.empty[Long, Long]
+    // AvailableNow snapshots the source's latest offset when the query
+    // starts, so both micro-batches are added before start()
+    stream.addData(rows.take(rows.length / 2): _*)
+    stream.addData(rows.drop(rows.length / 2): _*)
+    // written on the stream's thread, read on this one
+    val served = scala.collection.concurrent.TrieMap.empty[Long, Long]
     val q = stream.toDS().toDF()
       .writeStream
       .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        served = served ++ TextQueries.perceptronScore(b.toDF(), w).collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+        served ++= TextQueries.perceptronScore(b.toDF(), w).collect()
+          .map(r => r.getLong(0) -> r.getLong(1))
         ()
       }
       .trigger(Trigger.AvailableNow())
       .start()
-    stream.addData(rows.take(rows.length / 2): _*)
-    stream.addData(rows.drop(rows.length / 2): _*)
     q.awaitTermination(120000)
 
-    assert(served === batch,
+    assert(served.toMap === batch,
       "micro-batch inference must equal static-table inference")
   }
 }
